@@ -12,8 +12,8 @@ This generalizes belb's two one-hop merge mechanisms to a true fixpoint:
   component (FIXTURES.md invariant 4).
 
 Scale notes: every round is two shuffles (groupBy u, join back). The input
-and every large+small round-pair take an eager checkpoint (local by
-default, reliable under ``durable_rounds`` — see
+and every large+small round-pair take an eager checkpoint (local under a
+``local[...]`` master, reliable on a cluster — see
 :func:`connected_components`) — load-bearing, both for lineage truncation
 (the plan otherwise grows exponentially in rounds)
 and because each round-pair re-evaluates its input ~6× across branches,
@@ -77,15 +77,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return via_nbrs.union(self_edge)
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    # order-independent, overflow-free (ANSI-safe) checksum of the edge set
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
-
-
 def _is_star_forest(edges: DataFrame) -> bool:
     """True iff the canonical (u > v) edge set is a star forest rooted at
     per-component minima — EXACTLY the large-star/small-star fixpoint:
@@ -118,11 +109,17 @@ def _is_star_forest(edges: DataFrame) -> bool:
     return violations.isEmpty()
 
 
+def _reliable_rounds(master: str) -> bool:
+    """True iff CC rounds need reliable checkpoints: every master except
+    single-JVM local mode (``local`` / ``local[...]``), where an executor
+    loss is a driver loss and a durable write buys nothing."""
+    return not (master == "local" or master.startswith("local["))
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     max_iter: int = 30,
-    durable_rounds: bool = False,
 ) -> DataFrame:
     """edges(uid_a, uid_b) [+ nodes(uid)] -> (uid, cluster), cluster=min(uid)
     of the component; singletons (nodes without edges) map to themselves.
@@ -138,20 +135,17 @@ def connected_components(
       that is a trivial RDD scan, while through a cached InMemoryRelation
       the re-evaluations cost ~6× the round itself (measured 22s vs 3.5s
       for round 1). Persist is NOT a substitute for checkpoint here.
-    - Checkpoint DURABILITY is a caller choice (r6). Default
-      ``durable_rounds=False``: every checkpoint is a localCheckpoint — no
-      filesystem round-trip (measured 2.4→2.0 s per CC call at sf1.0; at
-      cluster scale it removes a per-round HDFS/S3 write). The honest
-      trade-off: a lost local block fails the JOB (lineage is truncated, so
-      nothing can be recomputed), and the caller reruns the whole operator
-      — which is deterministic and, in local mode, exactly the pre-existing
-      failure semantics (any executor loss kills the one JVM anyway).
-      ``durable_rounds=True`` restores the r5 behavior — every round a
-      reliable checkpoint — for long multi-round runs on real clusters
-      where mid-job executor loss must not fail the job. A mixed
-      every-K-rounds scheme was considered and REJECTED: with truncated
-      lineage between rounds, an interval durable write protects only the
-      round immediately after it, so it costs the write without delivering
+    - Checkpoint DURABILITY follows the master (:func:`_reliable_rounds`).
+      Under ``local[...]`` every checkpoint is a localCheckpoint — no
+      filesystem round-trip (measured 2.4→2.0 s per CC call at sf1.0). A
+      lost local block fails the JOB (lineage is truncated, so nothing can
+      be recomputed), which in local mode is the pre-existing failure
+      semantics anyway: any executor loss kills the one JVM. On any other
+      master every round is a reliable checkpoint, so mid-job executor loss
+      on a real cluster does not fail the job. A mixed every-K-rounds
+      scheme was considered and REJECTED: with truncated lineage between
+      rounds, an interval durable write protects only the round
+      immediately after it, so it costs the write without delivering
       bounded recovery.
     - Convergence is tested STRUCTURALLY (:func:`_is_star_forest`: one cheap
       job per round-pair) instead of fingerprint-comparing consecutive
@@ -159,9 +153,10 @@ def connected_components(
       observe no change. An already-converged input runs zero rounds.
     """
     ensure_checkpoint_dir(edges.sparkSession)
+    reliable = _reliable_rounds(edges.sparkSession.sparkContext.master)
 
     def _ckpt(df: DataFrame) -> DataFrame:
-        if durable_rounds:
+        if reliable:
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 

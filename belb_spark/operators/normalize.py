@@ -4,14 +4,13 @@ Re-expresses belb's surface-form normalization (quote/tab stripping
 ``belb/preprocessing/data.py:680-686``, unicode-space cleanup
 ``belb/preprocessing/transform.py:154-163``, lowercase comparison
 ``belb/scripts/stats.py:86-94``) and synonym canonicalization (keep-preferred
-dedup ``belb/kbs/kb.py:251-263`` + broadcast dictionary joins
-``belb/kbs/kb.py:538-570``) as pure DataFrame expressions.
+dedup ``belb/kbs/kb.py:251-263`` + dictionary lookups
+``belb/kbs/kb.py:538-570``) as DataFrame expressions.
 
-Everything is JVM-side whole-stage-codegen: tokenization is one
-``split(lower(content))``, and dictionary canonicalization is either a
-map-literal ``transform`` (small dict — zero shuffle, the common case: belb's
-dictionaries are broadcast-sized) or an explode + broadcast-join + re-agg
-(large dict).
+Tokenize + canonicalize run fused in ONE Arrow pass over ``content`` (C-regex
++ dict lookups, the dict broadcast in the closure — zero shuffle; belb's
+dictionaries are broadcast-sized). :func:`canonicalize` also offers the
+pure-JVM map-literal ``transform`` for small dictionaries.
 
 The per-row invariant column ``content_sha = sha2(content, 256)`` is computed
 here once and carried through every later stage (BASELINE.json north rule).
@@ -23,14 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
-
-# tokens = maximal runs of [a-z0-9_] over the lowercased content; everything
-# else (quotes, tabs, unicode spaces, punctuation) acts as a separator, which
-# subsumes belb's strip/replace normalizations X1-X4 (SURVEY.md §2.9)
-_TOKEN_SPLIT = "[^a-z0-9_]+"
-
-MAP_LITERAL_MAX = 20_000  # retained for API compat; see canonicalize() strategies
-
 
 def assign_uids(repos: DataFrame) -> DataFrame:
     """Deterministic uid = row_number over the natural key (repo, path,
@@ -146,49 +137,32 @@ def canonical_token_map(synonym_dict: DataFrame) -> dict[str, str]:
 def normalize(
     repos: DataFrame,
     synonym_dict: DataFrame | None = None,
-    strategy: str = "udf",
 ) -> DataFrame:
     """repos(uid?, repo, path, commit, lang, content) ->
     + content_sha, norm_tokens (canonicalized), norm_text, token_set.
 
-    Default strategy fuses tokenize + canonicalize into ONE Arrow pass over
-    ``content`` (C-regex + dict lookups — both serial bottlenecks when done
-    as interpreted higher-order JVM expressions). ``map``/``join`` keep the
-    whole stage JVM-side; all strategies are result-identical (tested).
+    Tokenize + canonicalize are fused into ONE Arrow pass over ``content``
+    (C-regex + dict lookups — both serial bottlenecks when done as
+    interpreted higher-order JVM expressions).
     """
     df = assign_uids(repos)
     df = df.withColumn("content_sha", F.sha2(F.col("content"), 256))
 
-    if strategy == "udf":
-        cmap = (
-            canonical_token_map(synonym_dict) if synonym_dict is not None else {}
-        )
+    cmap = canonical_token_map(synonym_dict) if synonym_dict is not None else {}
 
-        def _tok_canon(content: pd.Series) -> pd.Series:
-            import re
+    def _tok_canon(content: pd.Series) -> pd.Series:
+        import re
 
-            tok = re.compile(r"[a-z0-9_]+")
-            get = cmap.get
-            return content.map(
-                lambda c: [get(t, t) for t in tok.findall(c.lower())]
-            )
+        # tokens = maximal runs of [a-z0-9_] over the lowercased content;
+        # everything else (quotes, tabs, unicode spaces, punctuation) acts as
+        # a separator, which subsumes belb's strip/replace normalizations
+        # X1-X4 (SURVEY.md §2.9)
+        tok = re.compile(r"[a-z0-9_]+")
+        get = cmap.get
+        return content.map(lambda c: [get(t, t) for t in tok.findall(c.lower())])
 
-        tc = F.pandas_udf(_tok_canon, ArrayType(StringType()))
-        df = df.withColumn("norm_tokens", tc(F.col("content")))
-    else:
-        df = df.withColumn(
-            "tokens",
-            F.filter(
-                F.split(F.lower(F.col("content")), _TOKEN_SPLIT),
-                lambda t: t != F.lit(""),
-            ),
-        )
-        if synonym_dict is not None:
-            df = canonicalize(df, synonym_dict, strategy)
-        else:
-            df = df.withColumn("norm_tokens", F.col("tokens"))
-        df = df.drop("tokens")
-
+    tc = F.pandas_udf(_tok_canon, ArrayType(StringType()))
+    df = df.withColumn("norm_tokens", tc(F.col("content")))
     df = df.withColumn("norm_text", F.array_join("norm_tokens", " "))
     df = df.withColumn("token_set", F.array_sort(F.array_distinct("norm_tokens")))
     return df
@@ -197,7 +171,7 @@ def normalize(
 def canonicalize(
     df: DataFrame, synonym_dict: DataFrame, strategy: str = "udf"
 ) -> DataFrame:
-    """tokens -> norm_tokens via the synonym dictionary. Three physical
+    """tokens -> norm_tokens via the synonym dictionary. Two physical
     strategies with the same semantics:
 
     - ``udf`` (default): one vectorized Arrow UDF with the dict broadcast in
@@ -205,18 +179,13 @@ def canonicalize(
       (≤ millions of entries), the corpus is not; keeping the big side
       narrow wins at scale.
     - ``map``: pure-JVM map-literal ``transform`` — no shuffle, no Python,
-      but GetMapValue is a linear scan per token: right only for tiny dicts.
-    - ``join``: posexplode + broadcast-join + re-agg — pure JVM with hash
-      lookups, but shuffles the entire token stream twice; the belb-style
-      J3 re-expression (belb/kbs/kb.py:538-570) for when the dict outgrows
-      a broadcast variable.
+      but GetMapValue is a linear scan per token: right only for tiny dicts
+      (``udf`` takes this path itself at ≤ 64 entries).
     """
-    if strategy == "join":
-        return _canonicalize_via_join(df, synonym_dict)
     cmap = canonical_token_map(synonym_dict)
     if not cmap:
         return df.withColumn("norm_tokens", F.col("tokens"))
-    if strategy == "map" or (strategy == "udf" and len(cmap) <= 64):
+    if strategy == "map" or len(cmap) <= 64:
         pairs = []
         for k, v in sorted(cmap.items()):
             pairs.append(F.lit(k))
@@ -232,32 +201,6 @@ def canonicalize(
 
     canon_udf = F.pandas_udf(_canon, ArrayType(StringType()))
     return df.withColumn("norm_tokens", canon_udf(F.col("tokens")))
-
-
-def _canonicalize_via_join(df: DataFrame, synonym_dict: DataFrame) -> DataFrame:
-    """Large-dictionary path: posexplode tokens, broadcast-join the dict
-    (belb J3 semantics, belb/kbs/kb.py:538-570), re-assemble ordered."""
-    sym = (
-        synonym_dict.filter(F.col("description") == 0)
-        .select("identifier", F.col("name").alias("symbol"))
-    )
-    lookup = (
-        synonym_dict.join(sym, "identifier")
-        .select(F.col("name").alias("tok"), "symbol")
-        .distinct()
-    )
-    exploded = df.select("uid", F.posexplode("tokens").alias("pos", "tok"))
-    mapped = (
-        exploded.join(F.broadcast(lookup), "tok", "left")
-        .withColumn("ntok", F.coalesce("symbol", "tok"))
-        .groupBy("uid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "ntok"))), lambda s: s["ntok"]
-            ).alias("norm_tokens")
-        )
-    )
-    return df.join(mapped, "uid")
 
 
 def check_sha_invariant(df: DataFrame) -> int:

@@ -34,24 +34,11 @@ class ScoringConfig:
     w_cos: float = 0.40
     clip_chars: int = 600
     threshold: float = 0.62           # final edge cut (dev-tuned)
-    # partitions for the Arrow-UDF stage as waves-per-core. 3 (default) =
-    # the r2-r4 evidence shape: an explicit exchange isolates the python
-    # scorer on 3 waves/core. 0 = no exchange: the UDF pipelines directly
-    # off the payload join (JVM join work and python scoring overlap per
-    # task). Measured r4 at xxl: overlap cuts local[4] wall ~30%
-    # (142→102 s) but leaves local[16] flat (~52 s) — the 4N side's python
-    # phase is already short relative to its join phase — so it RAISES
-    # absolute low-core throughput while LOWERING the N→4N scaling ratio.
-    # Kept as an option for throughput-first deployments.
-    udf_waves: int = 3
-    # Join strategy for the payload joins and the final score join-back.
-    # False (default) = let Catalyst pick (sort-merge at scale). True =
-    # hint shuffle_hash: same shuffles, no sort of the 13M-row pair table
-    # — the scores/reps side builds a per-partition hash map instead.
-    # Safe wherever the per-partition build side fits in executor memory
-    # (scores ≈ distinct payload pairs × 40 B; at 10^12-file scale size
-    # shuffle partitions so build ≤ a few hundred MB per task).
-    hash_joins: bool = False
+
+
+# partitions of the Arrow-UDF stage, in waves per core: an explicit exchange
+# isolates the python scorer on 3 waves/core, so a straggler costs 1/3 wave
+_UDF_WAVES = 3
 
 
 def score_pairs(
@@ -109,8 +96,6 @@ def score_pairs(
     # distinct ships ~the distinct count. Two slim scans of the pair table
     # are cheaper than one fat pinned exchange.)
     reps = feats.dropDuplicates(["h"]).select("h", "token_set", "norm_text")
-    if cfg.hash_joins:
-        reps = reps.hint("shuffle_hash")
     payloads = (
         keyed.select("h_a", "h_b")
         .distinct()
@@ -133,14 +118,9 @@ def score_pairs(
         .withColumn("jacc", token_jaccard("ts_a", "ts_b"))
         .filter(F.col("jacc") >= F.lit(cfg.jaccard_prefilter))
     )
-    # udf_waves > 0: spread the Python-UDF stage across its own exchange
-    # (3 waves/core was the r2-r3 shape). udf_waves == 0: no barrier — the
-    # scorer consumes the join's output within the same stage, overlapping
-    # JVM and python compute (see ScoringConfig.udf_waves).
-    if cfg.udf_waves:
-        payloads = payloads.repartition(
-            cfg.udf_waves * spark.sparkContext.defaultParallelism
-        )
+    payloads = payloads.repartition(
+        _UDF_WAVES * spark.sparkContext.defaultParallelism
+    )
     rich = make_rich_score_udf(cfg.w_jw, cfg.w_lev, cfg.w_cos, cfg.clip_chars)
     payload_scores = payloads.select(
         "h_a",
@@ -152,8 +132,6 @@ def score_pairs(
     )
     # inner join implements the prefilter on the pair table (sub-threshold
     # payloads have no score row)
-    if cfg.hash_joins:
-        payload_scores = payload_scores.hint("shuffle_hash")
     return keyed.join(payload_scores, ["h_a", "h_b"]).select(
         "uid_a", "uid_b", "score"
     )

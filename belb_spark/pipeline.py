@@ -41,56 +41,16 @@ class ERConfig:
     # tune the edge threshold on labeled dev pairs (belb split discipline)
     # instead of using scoring.threshold verbatim
     tune_on_dev: bool = False
-    # physical strategy for the within-block self-join:
-    # 'capped' = anchor-capped join; 'salted' = replicated-anchor salting
-    # (same logical pair set — see operators/pairs.py)
-    pairs_strategy: str = "capped"
-    # explicit ingest partitioning (north rule): 0 = spark default
-    # parallelism. A single-file local parquet source otherwise yields ONE
-    # input split and serializes every expression-heavy stage.
-    input_partitions: int = 0
-    # stage-checkpoint mode:
-    # 'sync' (default): build → write → read back, serial. This IS the mode
-    #   the scaling evidence is collected in (BENCH/BASELINE.md): measured at
-    #   xxl on one 16 GB heap, async's persisted builds compete with the
-    #   scoring stage for cache and lose ~20% at BOTH parallelism levels
-    #   (VERDICT r3 "What's wrong" #1) — the default follows the evidence.
-    # 'async': stages 01-03 persist their build and write parquet on a
-    #   background thread, overlapped with downstream compute; resume
-    #   semantics unchanged (manifest only after a committed write). Wins
-    #   below ~10^5 rows where the builds fit comfortably in cache.
-    # 'off': EphemeralStore — no parquet at all (no resume); the wall delta
-    #   vs 'sync' measures the checkpoint I/O share for the scaling report.
-    checkpoint_mode: str = "sync"
-    # Write the 03_candidates checkpoint as a bucketed table
-    # (CLUSTERED BY (h_a, h_b) INTO n BUCKETS) instead of plain parquet.
-    # One extra shuffle at the stage-03 write buys the scoring stage a pair
-    # scan that already reports HashPartitioning(h_a, h_b): BOTH the payload
-    # distinct and the final score join-back consume it with zero exchange
-    # of the pair table — the two largest shuffles of stage 04 (measured in
-    # score_stage_lab: carry_h_bucket beat carry_h ~8% at 16c and scaled
-    # better N→4N). This is the sandbox twin of Iceberg bucket-partitioning
-    # the pair table at prod scale. Sync checkpoint mode only. Pick n as the
-    # stage-04 target parallelism (buckets are static once written).
-    # None (default, r6 — VERDICT r5 #4) = auto: $BELB_ER_BUCKETS (48)
-    # under sync mode — the configuration the r5 scaling evidence is built
-    # on — and 0 (off) under async/off modes, where bucketed writes are
-    # unsupported. An explicit int keeps the r5 behavior (incl. raising
-    # when combined with async).
-    bucket_candidates: int | None = None
-    # Write the 01_normalize checkpoint CLUSTERED BY (h) INTO n BUCKETS.
-    # The scoring stage derives its payload reps from this table with
-    # dropDuplicates(["h"]) followed by two h-keyed joins: bucketed by h,
-    # the distinct needs NO exchange and both payload joins reuse the
-    # bucketing on the reps side — the reps path was the last full shuffle
-    # of fat rows (norm_tokens ~0.5 kB/row) in stage 04, and in multi-
-    # executor deployments it is the stage's dominant inter-executor
-    # transfer (measured r5 standalone: stage-04 clean efficiency 0.63 vs
-    # 0.75 in single-JVM local mode — the delta IS this shuffle). Costs one
-    # exchange at the stage-01 write, identical at every cluster size.
-    # None = auto, as for bucket_candidates.
-    bucket_reps: int | None = None
 
+
+# Bucket count of the two bucketed checkpoints — 01_normalize CLUSTERED BY
+# (h) and 03_candidates CLUSTERED BY (h_a, h_b). One extra shuffle at each
+# stage write buys the scoring stage scans that already report their hash
+# partitioning: the payload-reps dropDuplicates(["h"]), the pair-table
+# distinct and the score join-back then run with zero exchange of either
+# table (the sandbox twin of Iceberg bucket-partitioning). Buckets are
+# static once written, so this is the stage-04 target parallelism.
+_BUCKETS = 48
 
 # bump when a stage's checkpoint schema changes (columns added/removed/
 # retyped): a resume against parquet written by another version must rebuild
@@ -114,24 +74,6 @@ def run_pipeline(
     checkpoint_dir: str | None = None,
     cfg: ERConfig = ERConfig(),
 ) -> ERResult:
-    # resolve the 'auto' bucket defaults BEFORE the signature so resume
-    # keys on the EFFECTIVE configuration (None -> 48 under sync, 0 under
-    # async/off; see ERConfig)
-    if cfg.bucket_candidates is None or cfg.bucket_reps is None:
-        import os as _os
-
-        auto = (
-            int(_os.environ.get("BELB_ER_BUCKETS", "48"))
-            if cfg.checkpoint_mode == "sync"
-            else 0
-        )
-        cfg = dataclasses.replace(
-            cfg,
-            bucket_candidates=(
-                auto if cfg.bucket_candidates is None else cfg.bucket_candidates
-            ),
-            bucket_reps=auto if cfg.bucket_reps is None else cfg.bucket_reps,
-        )
     # the resume signature covers config, input identity AND the stage
     # schema version: re-running the same checkpoint_dir over changed input
     # (ADVICE r1) or across a stage-schema change (r4: candidates carry
@@ -149,71 +91,33 @@ def run_pipeline(
         import tempfile
 
         checkpoint_dir = tempfile.mkdtemp(prefix="belb_spark_ckpt_")
-    if cfg.checkpoint_mode == "off":
-        from belb_spark.checkpoint import EphemeralStore
-
-        store = EphemeralStore(spark)
-    else:
-        store = CheckpointStore(spark, checkpoint_dir)
+    store = CheckpointStore(spark, checkpoint_dir)
 
     # sha-invariant / QAQC count jobs run on a side thread, overlapped with
     # the next stage's compute instead of serializing the critical path
     from concurrent.futures import ThreadPoolExecutor
 
     checks = ThreadPoolExecutor(max_workers=2)
-    # 'nothing outlives the call' must hold on the FAILURE path too: a
-    # mid-pipeline exception (sha assert, stage build error) would otherwise
-    # abandon in-flight async parquet writes and leak the persisted stage
-    # builds + the checks pool into the rest of the Spark session (ADVICE
-    # r3). finish()/shutdown() are idempotent, so the success path calling
-    # them explicitly first is fine.
     try:
-        result = _run_pipeline_body(
+        return _run_pipeline_body(
             spark, repos, labeled_pairs, checkpoint_dir, cfg, sig, metrics,
             store, checks, synonym_dict,
         )
-    except BaseException:
-        # abort path: cancel queued sha-count jobs (not just stop accepting
-        # new ones) and never let a failed async write raised by finish()
-        # mask the root-cause stage exception (ADVICE r4)
+    finally:
+        # abort path included: cancel queued sha-count jobs (not just stop
+        # accepting new ones) so nothing outlives the call (ADVICE r3/r4)
         checks.shutdown(wait=False, cancel_futures=True)
-        try:
-            store.finish()
-        except Exception as cleanup_err:  # noqa: BLE001 - secondary error
-            import warnings
-
-            warnings.warn(
-                f"checkpoint cleanup after pipeline abort failed: {cleanup_err!r}",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        raise
-    checks.shutdown(wait=False)
-    store.finish()
-    return result
 
 
 def _run_pipeline_body(
     spark, repos, labeled_pairs, checkpoint_dir, cfg, sig, metrics, store,
     checks, synonym_dict,
 ) -> ERResult:
-    def run_stage(name, build, partition_by=None, bucket_by=None):
-        if cfg.checkpoint_mode == "async":
-            return store.run_async(
-                name, sig, build, partition_by=partition_by, bucket_by=bucket_by
-            )
-        return store.run(
-            name, sig, build, partition_by=partition_by, bucket_by=bucket_by
-        )
-
-    # explicit partitioning at ingest, before any expression-heavy stage.
-    # 3 waves per core, matching shuffle partitions: a straggler split costs
-    # 1/3 wave, and — decisive in async mode — every downstream stage reads
-    # the PERSISTED build at this same partitioning (no parquet read-back to
-    # re-split it), so cores×1 partitions would cap map-side parallelism of
-    # stages 02-04 at one task per core
-    n_part = cfg.input_partitions or 3 * spark.sparkContext.defaultParallelism
-    repos_in = repos.repartition(n_part)
+    # explicit partitioning at ingest, before any expression-heavy stage
+    # (north rule): a single-file local parquet source otherwise yields ONE
+    # input split and serializes every expression-heavy stage. 3 waves per
+    # core, matching shuffle partitions: a straggler split costs 1/3 wave.
+    repos_in = repos.repartition(3 * spark.sparkContext.defaultParallelism)
     # content lives ONLY here — uid-addressable for the sha checks. The 01
     # checkpoint stores (uid, content_sha, norm_tokens): content was ~half
     # its bytes and nothing downstream needs it (VERDICT r2 #1).
@@ -230,15 +134,16 @@ def _run_pipeline_body(
     # pair table (r4: pairs ship pre-keyed so the scoring stage loses both
     # uid→h translation shuffles), and 16 bytes beat 32-char strings on
     # every one of those shuffles.
-    norm_res = run_stage(
+    norm_res = store.run(
         "01_normalize",
+        sig,
         lambda: normalize(repos_in, synonym_dict).select(
             "uid",
             "content_sha",
             "norm_tokens",
             F.unhex(F.md5(F.to_json("norm_tokens"))).alias("h"),
         ),
-        bucket_by=(cfg.bucket_reps, ["h"]) if cfg.bucket_reps else None,
+        bucket_by=(_BUCKETS, ["h"]),
     )
     norm = norm_res.df.withColumn(
         "norm_text", F.array_join("norm_tokens", " ")
@@ -260,7 +165,9 @@ def _run_pipeline_body(
     # in the fused window tower — the compact parquet round-trip feeds the
     # self-join branches cheaper than re-flowing the live minhash, 52.5s vs
     # 45.8s for 02+03 at local[16]; keep the two-stage shape.)
-    blocks_res = run_stage("02_blocks", lambda: block_keys(norm, cfg.blocking))
+    blocks_res = store.run(
+        "02_blocks", sig, lambda: block_keys(norm, cfg.blocking)
+    )
     blocks = blocks_res.df
     metrics["block_rows"] = blocks_res.rows
 
@@ -268,22 +175,16 @@ def _run_pipeline_body(
     # One checkpoint for both pair families: block candidates (to be scored)
     # and ready exact-duplicate star edges (score 1.0 by construction).
     # The no-silent-caps accounting (emitted vs theoretical, max block,
-    # block rows) rides the candidates action as a Spark Observation on the
-    # capped path — zero extra jobs, zero re-evaluation of the live block-key
-    # derivation. The salted path (evidence/experiments) keeps a side-thread
-    # aggregate overlapped with the build.
+    # block rows) rides the candidates action as a Spark Observation — zero
+    # extra jobs, zero re-evaluation of the live block-key derivation.
     from pyspark.sql import Observation
 
-    obs = Observation("pair_stats") if cfg.pairs_strategy != "salted" else None
+    obs = Observation("pair_stats")
 
     def build_candidates() -> DataFrame:
-        if cfg.pairs_strategy == "salted":
-            from belb_spark.operators.pairs import candidate_pairs_salted
-
-            blk = candidate_pairs_salted(blocks, cfg.pairs)
-        else:
-            blk = candidate_pairs(blocks, cfg.pairs, observe=obs)
-        blk = blk.withColumn("src", F.lit("block"))
+        blk = candidate_pairs(blocks, cfg.pairs, observe=obs).withColumn(
+            "src", F.lit("block")
+        )
         # exact rows are never scored — null content keys keep the union
         # schema aligned with the pre-keyed block pairs
         exact = (
@@ -299,49 +200,35 @@ def _run_pipeline_body(
         )
         return blk_only.unionByName(exact)
 
-    if obs is not None:
-        # partitioned by src so per-family row counts come from the manifest
-        # (parquet footers) when the write is synchronous
-        cand_res = run_stage(
-            "03_candidates",
-            build_candidates,
-            partition_by=["src"],
-            bucket_by=(cfg.bucket_candidates, ["h_a", "h_b"])
-            if cfg.bucket_candidates
-            else None,
-        )
-        if cand_res.resumed:
-            # the observation never fired (no action ran); the stats were
-            # annotated into the manifest by the run that built the stage
-            stats = store.log[-1].get("metrics") or {}
-            if "theoretical" not in stats:  # pre-annotation checkpoint dir
-                stats = pair_stats(blocks, cfg.pairs).agg(
-                    F.sum("pairs_theoretical").alias("theoretical"),
-                    F.sum("pairs_emitted").alias("emitted"),
-                    F.max("block_size").alias("max_block"),
-                ).collect()[0]
-        else:
-            stats = obs.get  # ready: the stage action has completed
-            store.annotate("03_candidates", dict(stats))
+    # partitioned by src so per-family row counts come from the manifest
+    # (parquet footers)
+    cand_res = store.run(
+        "03_candidates",
+        sig,
+        build_candidates,
+        partition_by=["src"],
+        bucket_by=(_BUCKETS, ["h_a", "h_b"]),
+    )
+    if cand_res.resumed:
+        # the observation never fired (no action ran); the stats were
+        # annotated into the manifest by the run that built the stage
+        stats = store.log[-1].get("metrics") or {}
+        if "theoretical" not in stats:
+            # the manifest lacks them: a pre-annotation checkpoint dir, or a
+            # kill between the manifest write and the annotate below. Over
+            # the same blocks the Observation saw: candidate_pairs never
+            # pairs exact: keys (exact_duplicate_edges does)
+            stats = pair_stats(
+                blocks.filter(~F.col("block_key").startswith("exact:")),
+                cfg.pairs,
+            ).agg(
+                F.sum("pairs_theoretical").alias("theoretical"),
+                F.sum("pairs_emitted").alias("emitted"),
+                F.max("block_size").alias("max_block"),
+            ).collect()[0]
     else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        stats_df = pair_stats(blocks, cfg.pairs).agg(
-            F.sum("pairs_theoretical").alias("theoretical"),
-            F.sum("pairs_emitted").alias("emitted"),
-            F.max("block_size").alias("max_block"),
-        )
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            stats_future = pool.submit(lambda: stats_df.collect()[0])
-            cand_res = run_stage(
-                "03_candidates",
-                build_candidates,
-                partition_by=["src"],
-                bucket_by=(cfg.bucket_candidates, ["h_a", "h_b"])
-                if cfg.bucket_candidates
-                else None,
-            )
-        stats = stats_future.result()
+        stats = obs.get  # ready: the stage action has completed
+        store.annotate("03_candidates", dict(stats))
     metrics["pairs_theoretical"] = int(stats["theoretical"] or 0)
     metrics["pairs_capped_estimate"] = int(stats["emitted"] or 0)
     metrics["max_block_size"] = int(stats["max_block"] or 0)
@@ -352,21 +239,13 @@ def _run_pipeline_body(
     block_pairs = cand_res.df.filter(F.col("src") == "block").select(
         "uid_a", "uid_b", "h_a", "h_b"
     )
-    if cand_res.partition_rows:
-        n_exact = cand_res.partition_rows.get("src=exact", 0)
-    else:  # async/ephemeral: one cheap count off the persisted build
-        n_exact = exact_edges.count()
+    n_exact = cand_res.partition_rows.get("src=exact", 0)
     metrics["exact_dup_edges"] = n_exact
     metrics["candidate_pairs"] = cand_res.rows - n_exact
 
-    # 4. scoring (block candidates only). Join any in-flight background
-    # stage writes FIRST: the scoring-stage wall defines the reported
-    # pairs-scored/sec metric, and a parquet write overlapping it would
-    # silently eat cores out of the measured stage. 01-03 writes still
-    # overlap each other's downstream compute; the wait is recorded.
-    metrics["ckpt_drain_sec"] = round(store.drain(), 3)
-    scores_res = run_stage(
-        "04_scores", lambda: score_pairs(block_pairs, norm, cfg.scoring)
+    # 4. scoring (block candidates only)
+    scores_res = store.run(
+        "04_scores", sig, lambda: score_pairs(block_pairs, norm, cfg.scoring)
     )
     metrics["pairs_scored"] = scores_res.rows
     metrics["scoring_wall_sec"] = scores_res.wall_sec
@@ -414,8 +293,6 @@ def _run_pipeline_body(
             cc.withColumnRenamed("uid", "anchor"), "anchor"
         ).select("uid", "cluster")
 
-    # 5 writes synchronously: its read-back df is the RETURNED assignment and
-    # must stay valid after the persisted upstream builds are released
     assign_res = store.run("05_clusters", sig, build_assignment)
     assignment = assign_res.df
     metrics["rows_clustered"] = assign_res.rows
@@ -432,14 +309,11 @@ def _run_pipeline_body(
         ev = pairwise_metrics(assignment, labeled_pairs)
         metrics["eval"] = metrics_dict(ev)
 
-    # resolve the overlapped QAQC jobs, then join in-flight stage writes and
-    # release every persisted build (nothing outlives the call)
+    # resolve the overlapped QAQC jobs
     violations = sha_stage1.result()
     assert violations == 0, f"sha256 invariant broken in normalize: {violations}"
     violations = sha_final.result()
     assert violations == 0, f"sha256 invariant broken end-to-end: {violations}"
-    checks.shutdown()
-    store.finish()
 
     stage_log = store.metrics_table()
     (pathlib.Path(checkpoint_dir) / "metrics.json").write_text(

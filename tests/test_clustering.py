@@ -1,7 +1,7 @@
 """Connected components on hand-built graphs (SURVEY.md §5 strategy 3):
 chains, stars, cycles, multiple components, singletons."""
 
-from belb_spark.operators.clustering import connected_components
+from belb_spark.operators.clustering import _reliable_rounds, connected_components
 
 
 def _cc(spark, edges, nodes=None):
@@ -62,3 +62,14 @@ def test_star_input_jobs_budget(spark):
     got = {r["uid"]: r["cluster"] for r in out.collect()}
     assert got == {10: 2, 2: 2, 3: 2, 4: 2, 20: 20, 21: 20, 22: 20}
     assert jobs_loop <= 14, f"CC loop launched {jobs_loop} driver jobs (>14)"
+
+
+def test_round_checkpoint_durability_follows_master():
+    """Local mode keeps CC rounds in localCheckpoint blocks (an executor
+    loss is a driver loss there); any cluster master gets reliable
+    checkpoints. Pure string selection — no cluster is started."""
+    assert not _reliable_rounds("local[4]")
+    assert not _reliable_rounds("local[*]")
+    assert not _reliable_rounds("local")
+    assert _reliable_rounds("spark://host:7077")
+    assert _reliable_rounds("local-cluster[2,1,1024]")

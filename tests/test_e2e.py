@@ -102,6 +102,95 @@ def test_partial_resume_after_invalidation(spark, tiny_spark, ckpt_dir, result_r
     assert got == result_rows
 
 
+def test_bucketed_candidates_agree_and_reregister(
+    spark, tiny_spark, ckpt_dir, result_rows
+):
+    """03_candidates is written as a CLUSTERED BY (h_a, h_b) table (the
+    Iceberg bucket-partition twin): its scan reports the bucket spec, and a
+    resume in a session WITHOUT the catalog entry re-registers the table
+    from the manifest's stored DDL and reproduces the build's clustering."""
+    from belb_spark.checkpoint import CheckpointStore
+
+    tbl = CheckpointStore(spark, ckpt_dir)._table_name("03_candidates")
+    assert spark.catalog.tableExists(tbl)
+    # the scan of the bucketed stage reports its bucket spec (this is the
+    # property plain parquet loses): scoring's payload distinct and
+    # join-back consume it with no exchange of the pair table
+    plan = (
+        spark.table(tbl)
+        .filter(F.col("src") == "block")
+        .select("h_a", "h_b")
+        .distinct()
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Bucketed: true" in plan, plan
+    assert "Exchange" not in plan, plan  # distinct consumes the scan
+
+    # fresh-session resume: no catalog entry, only files + manifest
+    spark.sql(f"DROP TABLE {tbl}")
+    res = run_pipeline(
+        spark,
+        tiny_spark["repos"],
+        tiny_spark["synonym_dict"],
+        labeled_pairs=None,
+        checkpoint_dir=ckpt_dir,
+    )
+    assert all(s["resumed"] for s in res.stages), res.stages
+    assert spark.catalog.tableExists(tbl)
+    got = sorted((r["uid"], r["cluster"]) for r in res.assignment.collect())
+    assert got == result_rows
+
+
+def test_bucketed_reps_agree_and_dedup_without_exchange(spark, ckpt_dir, result):
+    """01_normalize is written CLUSTERED BY (h): the scoring stage's
+    payload-reps derivation — dropDuplicates(["h"]) on that table — needs
+    NO exchange (the reps path is stage 04's dominant inter-executor
+    transfer in multi-executor deployments; measured r5 standalone)."""
+    from belb_spark.checkpoint import CheckpointStore
+
+    tbl = CheckpointStore(spark, ckpt_dir)._table_name("01_normalize")
+    assert spark.catalog.tableExists(tbl)
+    plan = (
+        spark.table(tbl)
+        .dropDuplicates(["h"])
+        .select("h")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Bucketed: true" in plan, plan
+    assert "Exchange" not in plan, plan  # reps dedup consumes the scan
+
+
+def test_resume_recomputes_missing_pair_stats(spark, tiny_spark, ckpt_dir, result):
+    """A 03_candidates manifest without its annotated pair stats (a kill
+    between the manifest write and the annotate, or a pre-annotation
+    checkpoint dir) resumes every stage and recomputes the stats from the
+    blocks — the same numbers the build's Observation reported."""
+    import json
+    import pathlib
+
+    manifest = pathlib.Path(ckpt_dir) / "03_candidates.manifest.json"
+    m = json.loads(manifest.read_text())
+    assert "theoretical" in m["metrics"], m["metrics"]
+    del m["metrics"]
+    manifest.write_text(json.dumps(m, indent=2))
+
+    res = run_pipeline(
+        spark,
+        tiny_spark["repos"],
+        tiny_spark["synonym_dict"],
+        labeled_pairs=None,
+        checkpoint_dir=ckpt_dir,
+    )
+    assert all(s["resumed"] for s in res.stages), res.stages
+    for key in ("pairs_theoretical", "pairs_capped_estimate", "max_block_size"):
+        assert res.metrics[key] == result.metrics[key], key
+    assert result.metrics["pairs_capped_estimate"] > 0
+
+
 def test_resume_rebuilds_on_config_change(spark, tiny_spark, ckpt_dir):
     cfg = ERConfig(cc_max_iter=29)  # different signature
     res3 = run_pipeline(
@@ -113,140 +202,3 @@ def test_resume_rebuilds_on_config_change(spark, tiny_spark, ckpt_dir):
         cfg=cfg,
     )
     assert not any(s["resumed"] for s in res3.stages)
-
-
-def test_checkpoint_modes_agree(spark, tiny_spark):
-    """'sync' (r2 behavior), 'async' (overlapped writes, the default) and
-    'off' (EphemeralStore, no parquet) are physical strategies for the same
-    pipeline — identical clustering and metrics."""
-    from belb_spark.pipeline import ERConfig, run_pipeline
-
-    outs = {}
-    for mode in ["sync", "async", "off"]:
-        res = run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            tiny_spark["labeled_pairs"],
-            cfg=ERConfig(checkpoint_mode=mode),
-        )
-        outs[mode] = {
-            "f1": res.metrics["eval"]["all"]["f1"],
-            "rows": res.metrics["rows_clustered"],
-            "pairs": res.metrics["pairs_scored"],
-            "assign": sorted(
-                (r["uid"], r["cluster"]) for r in res.assignment.collect()
-            ),
-        }
-    assert outs["sync"] == outs["async"] == outs["off"]
-
-
-def test_bucketed_candidates_agree_and_reregister(spark, tiny_spark):
-    """bucket_candidates=N writes 03_candidates as a CLUSTERED BY (h_a, h_b)
-    table (the Iceberg bucket-partition twin): identical clustering/metrics
-    to the plain-parquet run, and a resume in a session WITHOUT the catalog
-    entry re-registers the table from the manifest's stored DDL."""
-    d = tempfile.mkdtemp(prefix="belb_bucket_ckpt_")
-    try:
-        cfg = ERConfig(bucket_candidates=8)
-        res = run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            tiny_spark["labeled_pairs"],
-            checkpoint_dir=d,
-            cfg=cfg,
-        )
-        base = run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            tiny_spark["labeled_pairs"],
-        )
-        assert res.metrics["eval"]["all"]["f1"] == base.metrics["eval"]["all"]["f1"]
-        assert res.metrics["pairs_scored"] == base.metrics["pairs_scored"]
-        got = sorted((r["uid"], r["cluster"]) for r in res.assignment.collect())
-        want = sorted((r["uid"], r["cluster"]) for r in base.assignment.collect())
-        assert got == want
-
-        # the scan of the bucketed stage reports its bucket spec (this is
-        # the property plain parquet loses): scoring's payload distinct and
-        # join-back consume it with no exchange of the pair table
-        from belb_spark.checkpoint import CheckpointStore
-
-        store = CheckpointStore(spark, d)
-        tbl = store._table_name("03_candidates")
-        assert spark.catalog.tableExists(tbl)
-        plan = (
-            spark.table(tbl)
-            .filter(F.col("src") == "block")
-            .select("h_a", "h_b")
-            .distinct()
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Bucketed: true" in plan, plan
-        assert "Exchange" not in plan, plan  # distinct consumes the scan
-
-        # fresh-session resume: no catalog entry, only files + manifest
-        spark.sql(f"DROP TABLE {tbl}")
-        res2 = run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            labeled_pairs=None,
-            checkpoint_dir=d,
-            cfg=cfg,
-        )
-        assert all(s["resumed"] for s in res2.stages), res2.stages
-        got2 = sorted((r["uid"], r["cluster"]) for r in res2.assignment.collect())
-        assert got2 == want
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_bucketed_reps_agree_and_dedup_without_exchange(spark, tiny_spark):
-    """bucket_reps=N writes 01_normalize CLUSTERED BY (h): identical
-    clustering to the plain run, and the scoring stage's payload-reps
-    derivation — dropDuplicates(["h"]) on that table — needs NO exchange
-    (the reps path is stage 04's dominant inter-executor transfer in
-    multi-executor deployments; measured r5 standalone)."""
-    d = tempfile.mkdtemp(prefix="belb_breps_ckpt_")
-    try:
-        res = run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            tiny_spark["labeled_pairs"],
-            checkpoint_dir=d,
-            cfg=ERConfig(bucket_candidates=8, bucket_reps=8),
-        )
-        base = run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            tiny_spark["labeled_pairs"],
-        )
-        assert res.metrics["eval"]["all"]["f1"] == base.metrics["eval"]["all"]["f1"]
-        got = sorted((r["uid"], r["cluster"]) for r in res.assignment.collect())
-        want = sorted((r["uid"], r["cluster"]) for r in base.assignment.collect())
-        assert got == want
-
-        from belb_spark.checkpoint import CheckpointStore
-
-        store = CheckpointStore(spark, d)
-        tbl = store._table_name("01_normalize")
-        assert spark.catalog.tableExists(tbl)
-        plan = (
-            spark.table(tbl)
-            .dropDuplicates(["h"])
-            .select("h")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Bucketed: true" in plan, plan
-        assert "Exchange" not in plan, plan  # reps dedup consumes the scan
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
