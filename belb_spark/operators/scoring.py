@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from belb_spark.functions.simfns import make_rich_score_udf, token_jaccard
+from belb_spark.session import _partitions
 
 
 @dataclass(frozen=True)
@@ -34,11 +35,6 @@ class ScoringConfig:
     w_cos: float = 0.40
     clip_chars: int = 600
     threshold: float = 0.62           # final edge cut (dev-tuned)
-
-
-# partitions of the Arrow-UDF stage, in waves per core: an explicit exchange
-# isolates the python scorer on 3 waves/core, so a straggler costs 1/3 wave
-_UDF_WAVES = 3
 
 
 def score_pairs(
@@ -118,9 +114,8 @@ def score_pairs(
         .withColumn("jacc", token_jaccard("ts_a", "ts_b"))
         .filter(F.col("jacc") >= F.lit(cfg.jaccard_prefilter))
     )
-    payloads = payloads.repartition(
-        _UDF_WAVES * spark.sparkContext.defaultParallelism
-    )
+    # an explicit exchange isolates the python scorer in its own tasks
+    payloads = payloads.repartition(_partitions(spark))
     rich = make_rich_score_udf(cfg.w_jw, cfg.w_lev, cfg.w_cos, cfg.clip_chars)
     payload_scores = payloads.select(
         "h_a",

@@ -30,6 +30,7 @@ from belb_spark.operators.pairs import (
     pair_stats,
 )
 from belb_spark.operators.scoring import ScoringConfig, edges_from_scores, score_pairs
+from belb_spark.session import _partitions
 
 
 @dataclass(frozen=True)
@@ -42,15 +43,6 @@ class ERConfig:
     # instead of using scoring.threshold verbatim
     tune_on_dev: bool = False
 
-
-# Bucket count of the two bucketed checkpoints — 01_normalize CLUSTERED BY
-# (h) and 03_candidates CLUSTERED BY (h_a, h_b). One extra shuffle at each
-# stage write buys the scoring stage scans that already report their hash
-# partitioning: the payload-reps dropDuplicates(["h"]), the pair-table
-# distinct and the score join-back then run with zero exchange of either
-# table (the sandbox twin of Iceberg bucket-partitioning). Buckets are
-# static once written, so this is the stage-04 target parallelism.
-_BUCKETS = 48
 
 # bump when a stage's checkpoint schema changes (columns added/removed/
 # retyped): a resume against parquet written by another version must rebuild
@@ -113,11 +105,25 @@ def _run_pipeline_body(
     spark, repos, labeled_pairs, checkpoint_dir, cfg, sig, metrics, store,
     checks, synonym_dict,
 ) -> ERResult:
+    # One count, 3 per core of the session (session._partitions), sizes the
+    # ingest repartition and the bucket count of the two bucketed
+    # checkpoints — 01_normalize CLUSTERED BY (h) and 03_candidates
+    # CLUSTERED BY (h_a, h_b). One extra shuffle at each stage write buys
+    # the scoring stage scans that already report their hash partitioning:
+    # the payload-reps dropDuplicates(["h"]), the pair-table distinct and
+    # the score join-back then run with zero exchange of either table (the
+    # sandbox twin of Iceberg bucket-partitioning). Buckets are static once
+    # written, so this is the stage-04 target parallelism; a resume reads
+    # the count its manifest recorded, whatever the session's. Per core,
+    # not fixed: every partition pays a fixed task cost (~0.2 s of Python
+    # worker set-up where a UDF runs) that these data sizes do not cover
+    # for a count sized to a bigger cluster — on local[4], 48 buckets ran a
+    # ~11k-row cold build in 563 tasks, 12 buckets in 240.
+    n_parts = _partitions(spark)
     # explicit partitioning at ingest, before any expression-heavy stage
     # (north rule): a single-file local parquet source otherwise yields ONE
-    # input split and serializes every expression-heavy stage. 3 waves per
-    # core, matching shuffle partitions: a straggler split costs 1/3 wave.
-    repos_in = repos.repartition(3 * spark.sparkContext.defaultParallelism)
+    # input split and serializes every expression-heavy stage
+    repos_in = repos.repartition(n_parts)
     # content lives ONLY here — uid-addressable for the sha checks. The 01
     # checkpoint stores (uid, content_sha, norm_tokens): content was ~half
     # its bytes and nothing downstream needs it (VERDICT r2 #1).
@@ -143,7 +149,7 @@ def _run_pipeline_body(
             "norm_tokens",
             F.unhex(F.md5(F.to_json("norm_tokens"))).alias("h"),
         ),
-        bucket_by=(_BUCKETS, ["h"]),
+        bucket_by=(n_parts, ["h"]),
     )
     norm = norm_res.df.withColumn(
         "norm_text", F.array_join("norm_tokens", " ")
@@ -207,7 +213,7 @@ def _run_pipeline_body(
         sig,
         build_candidates,
         partition_by=["src"],
-        bucket_by=(_BUCKETS, ["h_a", "h_b"]),
+        bucket_by=(n_parts, ["h_a", "h_b"]),
     )
     if cand_res.resumed:
         # the observation never fired (no action ran); the stats were
@@ -320,15 +326,12 @@ def _run_pipeline_body(
         json.dumps({"stages": stage_log, "metrics": metrics}, indent=2, default=str)
     )
     # metrics as a queryable table (Iceberg metrics table in prod)
-    try:
-        import pandas as _pd
+    import pandas as pd
 
-        _pd.DataFrame(
-            [
-                {k: v for k, v in e.items() if not isinstance(v, (list, dict))}
-                for e in stage_log
-            ]
-        ).to_parquet(pathlib.Path(checkpoint_dir) / "metrics.parquet", index=False)
-    except Exception:
-        pass  # metrics table is best-effort; metrics.json is authoritative
+    pd.DataFrame(
+        [
+            {k: v for k, v in e.items() if not isinstance(v, (list, dict))}
+            for e in stage_log
+        ]
+    ).to_parquet(pathlib.Path(checkpoint_dir) / "metrics.parquet", index=False)
     return ERResult(assignment=assignment, metrics=metrics, stages=stage_log)

@@ -14,13 +14,27 @@ import os
 from pyspark.sql import SparkSession
 
 
-def cores_from_master(master: str) -> int:
-    if master.startswith("local["):
-        inner = master[len("local[") : -1]
-        if inner == "*":
+def cores_from_master(master: str) -> int | None:
+    """Task slots of a local master: ``local`` (1 thread), ``local[N]``,
+    ``local[*]`` and ``local[N,F]`` (N threads, F task retries). None for
+    any other master: its cores are the cluster's, not this driver's."""
+    if master == "local":
+        return 1
+    if master.startswith("local[") and master.endswith("]"):
+        threads = master[len("local[") : -1].split(",")[0].strip()
+        if threads == "*":
             return os.cpu_count() or 8
-        return int(inner)
-    return os.cpu_count() or 8
+        return int(threads)
+    return None
+
+
+def _partitions(spark: SparkSession) -> int:
+    """Partition count of the ER stages' own exchanges and bucketed
+    checkpoints: 3 per core of the running session, so a straggler task
+    costs a third of a wave. Sized from the session, never fixed: each task
+    that runs Python pays ~0.2 s of worker set-up before its first row, so a
+    count sized for a bigger cluster multiplies that cost on a small one."""
+    return 3 * spark.sparkContext.defaultParallelism
 
 
 def get_spark(
@@ -32,22 +46,27 @@ def get_spark(
     """Build (or fetch) the configured SparkSession.
 
     master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default all cores).
-    ``shuffle_partitions`` defaults to cores (single-box: 1 wave of tasks per
-    shuffle; on a real cluster you would size this to ~2-3x total cores).
+    For a local master, ``spark.default.parallelism`` is its thread count and
+    ``shuffle_partitions`` defaults to max(cores, 8) (single-box: 1 wave of
+    tasks per shuffle). For any other master both are left to the
+    deployment's own settings unless ``shuffle_partitions`` is given.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     cores = cores_from_master(master)
-    if shuffle_partitions is None:
+    if shuffle_partitions is None and cores is not None:
         shuffle_partitions = max(cores, 8)
 
+    builder = SparkSession.builder.appName(app_name).master(master)
+    if cores is not None:
+        builder = builder.config("spark.default.parallelism", str(cores))
+    if shuffle_partitions is not None:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+        )
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
+        builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

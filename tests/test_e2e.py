@@ -1,6 +1,8 @@
 """End-to-end gate: pairwise F1 ≥ 0.99 on the test split (BASELINE.json),
 row conservation, sha invariant, deterministic re-run, resume semantics."""
 
+import json
+import pathlib
 import shutil
 import tempfile
 
@@ -127,6 +129,10 @@ def test_bucketed_candidates_agree_and_reregister(
     )
     assert "Bucketed: true" in plan, plan
     assert "Exchange" not in plan, plan  # distinct consumes the scan
+    # the bucket count follows the session: 3 per core
+    for stage in ("01_normalize", "03_candidates"):
+        m = json.loads((pathlib.Path(ckpt_dir) / f"{stage}.manifest.json").read_text())
+        assert m["bucket"]["n"] == 3 * spark.sparkContext.defaultParallelism, stage
 
     # fresh-session resume: no catalog entry, only files + manifest
     spark.sql(f"DROP TABLE {tbl}")
@@ -169,9 +175,6 @@ def test_resume_recomputes_missing_pair_stats(spark, tiny_spark, ckpt_dir, resul
     between the manifest write and the annotate, or a pre-annotation
     checkpoint dir) resumes every stage and recomputes the stats from the
     blocks — the same numbers the build's Observation reported."""
-    import json
-    import pathlib
-
     manifest = pathlib.Path(ckpt_dir) / "03_candidates.manifest.json"
     m = json.loads(manifest.read_text())
     assert "theoretical" in m["metrics"], m["metrics"]
@@ -202,3 +205,57 @@ def test_resume_rebuilds_on_config_change(spark, tiny_spark, ckpt_dir):
         cfg=cfg,
     )
     assert not any(s["resumed"] for s in res3.stages)
+
+
+def test_resume_across_bucket_counts(spark, tiny_spark, tmp_path, result_rows):
+    """A checkpoint dir written under another session's bucket count (5
+    here, 3 per core elsewhere) resumes without a rebuild: each bucketed
+    stage re-registers with the count its manifest recorded, and a rebuilt
+    scoring stage reads those 5-bucket tables."""
+    from belb_spark import pipeline
+    from belb_spark.checkpoint import CheckpointStore
+
+    ckpt = str(tmp_path)
+
+    def run():
+        return run_pipeline(
+            spark,
+            tiny_spark["repos"],
+            tiny_spark["synonym_dict"],
+            labeled_pairs=None,
+            checkpoint_dir=ckpt,
+        )
+
+    def rows(res):
+        return sorted((r["uid"], r["cluster"]) for r in res.assignment.collect())
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "_partitions", lambda spark: 5)
+        assert rows(run()) == result_rows
+
+    store = CheckpointStore(spark, ckpt)
+    tables = [store._table_name(s) for s in ("01_normalize", "03_candidates")]
+    for tbl in tables:
+        spark.sql(f"DROP TABLE {tbl}")
+    res = run()
+    assert all(s["resumed"] for s in res.stages), res.stages
+    assert rows(res) == result_rows
+    for tbl in tables:
+        desc = {
+            r["col_name"]: r["data_type"]
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()
+        }
+        assert desc["Num Buckets"] == "5", (tbl, desc)
+
+    store.invalidate("04_scores")
+    store.invalidate("05_clusters")
+    res = run()
+    by_stage = {s["stage"]: s["resumed"] for s in res.stages}
+    assert by_stage == {
+        "01_normalize": True,
+        "02_blocks": True,
+        "03_candidates": True,
+        "04_scores": False,
+        "05_clusters": False,
+    }, by_stage
+    assert rows(res) == result_rows

@@ -1,6 +1,6 @@
 """Driver-contract tests: entry() smoke + queries()/oracle_sql() parity on
-sf0.001 (the full sweep lives in scripts/check_oracles.py; run here on a
-representative subset so the suite stays fast)."""
+sf0.001 for every query (the same exact comparison as
+scripts/check_oracles.py)."""
 
 import duckdb
 import numpy as np
@@ -9,16 +9,6 @@ import pytest
 import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
-
-SUBSET = [
-    "dedup_minhash_lsh_pairs",
-    "er_cc_clusters",
-    "ann_cosine_topk",
-    "tpch_q1_agg",
-    "window_running_total",
-    "history_fixpoint",
-    "events_hourly_window",
-]
 
 
 @pytest.fixture(scope="module")
@@ -53,7 +43,7 @@ def _normalize(df):
     return normalize(df)
 
 
-@pytest.mark.parametrize("name", SUBSET)
+@pytest.mark.parametrize("name", list(entrymod.queries()))
 def test_query_matches_oracle(spark, duck, name):
     qs = entrymod.queries()
     sdf = _normalize(qs[name](spark, SF).toPandas())
