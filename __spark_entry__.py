@@ -55,23 +55,24 @@ NGRAM_W = 5
 HIGH = "('8','9','a','b','c','d','e','f')"
 
 
-def _fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
-    # the testdata files are ONE small parquet file / ONE row group each =
-    # one input split, so every scan is one task and the expression-heavy
-    # ops downstream (the interpreted higher-order dot-product towers of the
-    # embedding queries measured 2-4x the query wall at sf1.0) run
-    # single-core. Fan out to all cores only then: a source that already has
-    # as many splits as cores keeps its scan partitioning.
-    n = spark.sparkContext.defaultParallelism
-    return df.repartition(n) if df.rdd.getNumPartitions() < n else df
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fan_out(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    # testdata ships as ONE small parquet file = one input split; fan out to
+    # all cores before the expression-heavy ops (at real scale the source is
+    # already many splits and this repartition is dropped at the loader)
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
+        spark.sparkContext.defaultParallelism
+    )
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fan_out(spark, spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    # same single-split workaround as _docs: the testdata embeddings file is
+    # ONE parquet row group, so every scan is one task and the (interpreted
+    # higher-order) dot-product towers downstream run single-core — measured
+    # 2-4x the query wall at sf1.0. At real scale the source has >= cores
+    # splits and this repartition is dropped at the loader.
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
+        spark.sparkContext.defaultParallelism
+    )
 
 
 # --------------------------------------------------------- spark queries

@@ -105,20 +105,16 @@ def _run_pipeline_body(
     spark, repos, labeled_pairs, checkpoint_dir, cfg, sig, metrics, store,
     checks, synonym_dict,
 ) -> ERResult:
-    # One count, 3 per core of the session (session._partitions), sizes the
-    # ingest repartition and the bucket count of the two bucketed
-    # checkpoints — 01_normalize CLUSTERED BY (h) and 03_candidates
-    # CLUSTERED BY (h_a, h_b). One extra shuffle at each stage write buys
-    # the scoring stage scans that already report their hash partitioning:
-    # the payload-reps dropDuplicates(["h"]), the pair-table distinct and
-    # the score join-back then run with zero exchange of either table (the
-    # sandbox twin of Iceberg bucket-partitioning). Buckets are static once
-    # written, so this is the stage-04 target parallelism; a resume reads
-    # the count its manifest recorded, whatever the session's. Per core,
-    # not fixed: every partition pays a fixed task cost (~0.2 s of Python
-    # worker set-up where a UDF runs) that these data sizes do not cover
-    # for a count sized to a bigger cluster — on local[4], 48 buckets ran a
-    # ~11k-row cold build in 563 tasks, 12 buckets in 240.
+    # One count (session._partitions) sizes the ingest repartition and the
+    # bucket count of the two bucketed checkpoints — 01_normalize CLUSTERED
+    # BY (h) and 03_candidates CLUSTERED BY (h_a, h_b). One extra shuffle at
+    # each stage write buys the scoring stage scans that already report
+    # their hash partitioning: the payload-reps dropDuplicates(["h"]), the
+    # pair-table distinct and the score join-back then run with zero
+    # exchange of either table (the sandbox twin of Iceberg
+    # bucket-partitioning). Buckets are static once written, so this is the
+    # stage-04 target parallelism; a resume reads the count its manifest
+    # recorded, whatever the session's.
     n_parts = _partitions(spark)
     # explicit partitioning at ingest, before any expression-heavy stage
     # (north rule): a single-file local parquet source otherwise yields ONE

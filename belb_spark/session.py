@@ -32,8 +32,16 @@ def _partitions(spark: SparkSession) -> int:
     """Partition count of the ER stages' own exchanges and bucketed
     checkpoints: 3 per core of the running session, so a straggler task
     costs a third of a wave. Sized from the session, never fixed: each task
-    that runs Python pays ~0.2 s of worker set-up before its first row, so a
-    count sized for a bigger cluster multiplies that cost on a small one."""
+    that runs Python pays ~0.2 s of worker set-up before its first row
+    (README, "Per-task Python cost").
+
+    On a non-local master get_spark leaves ``spark.default.parallelism`` to
+    the deployment, and Spark's default is the executor cores registered
+    when the pipeline starts (at least 2). The bucket count is persisted in
+    the 01/03 manifests and fixes stage-04 parallelism for every resume of
+    that checkpoint dir, so a cluster deployment must set
+    ``spark.default.parallelism`` itself (dynamic allocation would otherwise
+    persist whatever happened to be up)."""
     return 3 * spark.sparkContext.defaultParallelism
 
 
