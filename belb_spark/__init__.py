@@ -11,7 +11,7 @@ Design tenets (SURVEY.md §7):
 - Every id assigned by ``row_number`` over an explicit order (determinism).
 - ``content`` is never rewritten: normalization produces derived columns only,
   and ``sha256(content)`` is carried and asserted through every stage.
-- Explicit partitioning/salting for the within-block self-join; AQE on.
+- Explicit partitioning and an anchor cap for the within-block self-join; AQE on.
 - Each stage checkpoints to Parquet (Iceberg-style manifest) and resumes.
 """
 

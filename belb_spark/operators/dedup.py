@@ -18,16 +18,13 @@ All operators are pure DataFrame expressions (no UDFs): shingling uses
 ``transform``; only ``explode`` materializes rows.
 
 Skew defense (shared with the ER pipeline): the band/shingle bucket
-self-joins route through :func:`pairs.candidate_pairs_salted`, so a hot
-bucket (a boilerplate 5-gram shared by 10^5 files, a band key of a vendored
-blob) is anchor-capped AND salted across reducers instead of going O(n²) on
-one key. Buckets up to ``PairsConfig.full_join_max`` emit ALL pairs (the
-exhaustive semantics the DuckDB oracles verify); bigger buckets emit
-anchor→member pairs only — bounded, connectivity-preserving, and observable
-via :func:`bucket_pair_stats` (no silent drops). Recall-sensitive dedup can
-pass ``hot_tier='within_salt'`` to additionally emit all pairs inside each
-≤rows_per_salt salt bucket (still bounded per reducer — see
-pairs.candidate_pairs_salted).
+self-joins route through the pipeline's pair builder,
+:func:`pairs.candidate_pairs`, so a hot bucket (a boilerplate 5-gram shared
+by 10^5 files, a band key of a vendored blob) is anchor-capped instead of
+going O(n²) on one key. Buckets up to ``PairsConfig.full_join_max`` emit ALL
+pairs (the exhaustive semantics the DuckDB oracles verify); bigger buckets
+emit anchor→member pairs only — bounded, connectivity-preserving, and
+observable via :func:`bucket_pair_stats` (no silent drops).
 
 Lifecycle (r6): the per-doc DISTINCT-shingle ARRAY table (id, arr) is the
 shared base of every consumer — MinHash signatures are per-row
@@ -53,7 +50,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from belb_spark.operators.blocking import shingles_col
-from belb_spark.operators.pairs import PairsConfig, candidate_pairs_salted, pair_stats
+from belb_spark.operators.pairs import PairsConfig, candidate_pairs, pair_stats
 
 HIGH_NIBBLE = ["8", "9", "a", "b", "c", "d", "e", "f"]  # hex digits with bit3 set
 
@@ -86,15 +83,12 @@ def md5_minhash_sig(shingles: Column, perms: int) -> list[Column]:
     ]
 
 
-def _bucket_pairs(
-    exploded: DataFrame, cfg: PairsConfig, hot_tier: str = "anchor"
-) -> DataFrame:
-    """(id, bucket_key) -> capped+salted candidate (id_a, id_b).
+def _bucket_pairs(exploded: DataFrame, cfg: PairsConfig) -> DataFrame:
+    """(id, bucket_key) -> anchor-capped candidate (id_a, id_b).
 
-    The same physical strategy as the ER pipeline's within-block self-join
-    (pairs.py): all pairs for buckets ≤ cfg.full_join_max, anchor→member
-    pairs (replicated-anchor salting) above — a hot bucket cannot emit O(n²)
-    pairs onto one reducer.
+    The ER pipeline's within-block self-join (pairs.candidate_pairs): all
+    pairs for buckets ≤ cfg.full_join_max, anchor→member pairs above — a hot
+    bucket cannot emit O(n²) pairs.
 
     Bucket keys are xxhash64-compressed to 8 bytes before the builder: the
     window sort and both shuffles compare longs instead of ~30-70 char
@@ -109,7 +103,7 @@ def _bucket_pairs(
         F.col(exploded.columns[0]).alias("uid"),
         F.xxhash64(F.col(exploded.columns[1])).alias("block_key"),
     )
-    return candidate_pairs_salted(blocks, cfg, hot_tier=hot_tier).select(
+    return candidate_pairs(blocks, cfg).select(
         F.col("uid_a").alias("id_a"), F.col("uid_b").alias("id_b")
     )
 
@@ -198,13 +192,12 @@ def minhash_lsh_pairs(
     min_jaccard: float = 0.2,
     pairs_cfg: PairsConfig = PairsConfig(),
     materialize: bool = False,
-    hot_tier: str = "anchor",
 ) -> DataFrame:
     """Near-duplicate pairs: docs sharing any LSH band, verified with true
     shingle-set Jaccard ≥ min_jaccard. Output (id_a, id_b, jaccard).
 
-    Band buckets bigger than ``pairs_cfg.full_join_max`` are anchor-capped +
-    salted (see module docstring); the exhaustive all-pairs semantics hold
+    Band buckets bigger than ``pairs_cfg.full_join_max`` are anchor-capped
+    (see module docstring); the exhaustive all-pairs semantics hold
     for every bucket at or under the cap.
 
     ``materialize=True`` additionally returns an eagerly-checkpointed
@@ -232,7 +225,7 @@ def minhash_lsh_pairs(
         parts = [F.col(f"sig{b * band_size + r}") for r in range(band_size)]
         bands.append(F.concat_ws("_", F.lit(str(b)), *parts))
     exploded = sigs.select("id", F.explode(F.array(*bands)).alias("band_key"))
-    pairs = _bucket_pairs(exploded, pairs_cfg, hot_tier)
+    pairs = _bucket_pairs(exploded, pairs_cfg)
     out = _jaccard_from_arrays(pairs, base, min_jaccard)
     return _materialize(out) if materialize else out
 
@@ -267,16 +260,15 @@ def ngram_jaccard_pairs(
     min_jaccard: float = 0.3,
     pairs_cfg: PairsConfig = PairsConfig(),
     materialize: bool = False,
-    hot_tier: str = "anchor",
 ) -> DataFrame:
     """Pairs sharing ≥1 width-n token shingle with shingle-Jaccard ≥ cut.
     The shared-shingle prejoin is the blocking step (no full cross join);
-    hot shingles above ``pairs_cfg.full_join_max`` docs are anchor-capped +
-    salted instead of emitting O(n²) pairs on one reducer.
+    hot shingles above ``pairs_cfg.full_join_max`` docs are anchor-capped
+    instead of emitting O(n²) pairs.
     ``materialize`` as in :func:`minhash_lsh_pairs`."""
     base = _doc_shingles(df, id_col, text_col, shingle_width)
     ex = base.select("id", F.explode("arr").alias("s"))
-    pairs = _bucket_pairs(ex, pairs_cfg, hot_tier)
+    pairs = _bucket_pairs(ex, pairs_cfg)
     out = _jaccard_from_arrays(pairs, base, min_jaccard)
     return _materialize(out) if materialize else out
 

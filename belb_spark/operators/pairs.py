@@ -5,8 +5,9 @@ this is the operator the new engine adds. Naively a block of n rows yields
 n(n-1)/2 pairs — a hot key (vendored file duplicated 10^5×) would emit 5e9
 pairs. Two structural defenses, both shuffle-aligned and AQE-friendly:
 
-1. **Exact-duplicate collapse.** ``exact:`` blocks need no scoring at all —
-   their pairs are emitted as ready edges (score 1.0) built from a groupBy,
+1. **Exact-duplicate collapse.** The pipeline's ``exact:`` blocks need no
+   scoring at all — the pipeline filters them out of the pairable blocks and
+   emits their pairs as ready edges (score 1.0) from a window min,
    star-shaped (min-uid anchor → member), O(n) per group instead of O(n²).
 
 2. **Anchor-capped join.** For every other block, rows are ranked by uid
@@ -14,10 +15,14 @@ pairs. Two structural defenses, both shuffle-aligned and AQE-friendly:
    the first ``anchor_rank`` rows OR the block is small (≤ full_join_max).
    Connectivity to the block's anchors is preserved (that is all transitive
    clustering needs), while a hot block of n rows emits ≤ anchor_rank·n pairs.
+   (Its n rows still rank on one window task; the cap bounds the output.)
    Dropped-pair counts are observable: emitted vs theoretical pair counts per
    block land in the metrics table (no silent caps).
 
-Output is unique on (uid_a, uid_b), uid_a < uid_b (FIXTURES.md invariant 3).
+:func:`candidate_pairs` is the one pair builder: the ER pipeline, the dedup
+family (``dedup._bucket_pairs``) and the embedding-cosine self-join all call
+it. Output is unique on (uid_a, uid_b), uid_a < uid_b (FIXTURES.md
+invariant 3).
 """
 
 from __future__ import annotations
@@ -44,8 +49,7 @@ def _rank_and_size(blocks: DataFrame) -> DataFrame:
 
     Callers that fan the ranked table into multiple consumers MUST pin an
     explicit ``repartition("block_key")`` ABOVE this window (see
-    candidate_pairs / candidate_pairs_salted): the self-join branches prune
-    different column sets, which makes the window subtrees canonically
+    candidate_pairs): the self-join branches prune different column sets, which makes the window subtrees canonically
     different — without the pinned exchange each branch re-evaluates the
     whole block-key derivation (minhash over every doc) under its own copy
     of the shuffle.
@@ -75,6 +79,20 @@ def exact_duplicate_edges(normalized: DataFrame) -> DataFrame:
     ).distinct()
 
 
+def _pair_counts(n, cfg: PairsConfig):
+    """(theoretical, emitted) pair counts of a block of ``n`` rows under the
+    anchor cap: all n(n-1)/2 pairs up to ``full_join_max``, else each of the
+    first k = ``anchor_rank`` uids pairs with every later one,
+    k·(n-1) - k(k-1)/2."""
+    n = n.cast("long")
+    theoretical = (n * (n - 1) / 2).cast("long")
+    k = cfg.anchor_rank
+    emitted = F.when(n <= cfg.full_join_max, theoretical).otherwise(
+        (F.lit(k) * (n - 1) - F.lit(k * (k - 1) // 2)).cast("long")
+    )
+    return theoretical, emitted
+
+
 def observed_pair_stats(cfg: PairsConfig) -> list:
     """Aggregate expressions for a Spark Observation over the ranked LEFT
     side of the candidate self-join: per-block facts are read off the
@@ -82,15 +100,8 @@ def observed_pair_stats(cfg: PairsConfig) -> list:
     no-silent-caps accounting (emitted vs theoretical pairs, max block,
     block rows) rides the candidates action itself — no second evaluation
     of the live block-key derivation, no separate stats job."""
-    n = F.col("bn").cast("long")
     first = F.col("rn_a") == 1
-    theoretical = (n * (n - 1) / 2).cast("long")
-    emitted = F.when(n <= cfg.full_join_max, theoretical).otherwise(
-        (
-            F.lit(cfg.anchor_rank) * (n - 1)
-            - F.lit(cfg.anchor_rank * (cfg.anchor_rank - 1) // 2)
-        ).cast("long")
-    )
+    theoretical, emitted = _pair_counts(F.col("bn"), cfg)
     zero = F.lit(0).cast("long")
     return [
         F.count(F.lit(1)).alias("block_rows"),
@@ -105,11 +116,12 @@ def candidate_pairs(
 ) -> DataFrame:
     """(uid, block_key) -> unique (uid_a, uid_b), uid_a < uid_b.
 
-    ``exact:`` keys are excluded here (handled by exact_duplicate_edges).
+    Every block is paired: callers drop key spaces that must not be (the
+    pipeline's ``exact:`` blocks) before calling. ``block_key`` may be any
+    orderable type (the pipeline's strings, dedup's xxhash64 longs).
     ``observe``: optional ``pyspark.sql.Observation`` that receives the
     :func:`observed_pair_stats` aggregates when the returned plan executes.
     """
-    b = blocks.filter(~F.col("block_key").startswith("exact:"))
     # a content key h in the block table rides both self-join sides, so the
     # output pairs are pre-keyed for scoring (no uid→h joins there)
     has_h = "h" in blocks.columns
@@ -117,7 +129,7 @@ def candidate_pairs(
     # so without it each side re-evaluates the window AND the (expensive)
     # block-key derivation below it — decisive once blocks stopped being a
     # checkpointed stage and carry the live minhash computation
-    ranked = _rank_and_size(b).repartition("block_key")
+    ranked = _rank_and_size(blocks).repartition("block_key")
     left = ranked.select(
         F.col("block_key"),
         F.col("uid").alias("uid_a"),
@@ -134,7 +146,8 @@ def candidate_pairs(
     # pinned exchange is evaluated twice instead of reused
     # merge hint (r6): without it Catalyst may BROADCAST this side, wrapping
     # it in a BroadcastExchange that re-evaluates the window tower instead
-    # of reading the pinned exchange (see candidate_pairs_salted); a
+    # of reading the pinned exchange (static broadcasts sit outside AQE
+    # stage reuse — measured 1.6x the builder wall at sf1.0); a
     # shuffle-based join keeps both sides on the one materialized exchange
     right = (
         ranked.filter(F.col("bn") > 0)
@@ -159,178 +172,13 @@ def candidate_pairs(
     return pairs
 
 
-def candidate_pairs_salted(
-    blocks: DataFrame,
-    cfg: PairsConfig = PairsConfig(),
-    salt_threshold: int = 1024,
-    rows_per_salt: int = 512,
-    hot_tier: str = "anchor",
-) -> DataFrame:
-    """Salted physical strategy for the same logical pair set (north rule:
-    "salted, explicitly repartitioned" block keys).
-
-    The anchor-capped join in :func:`candidate_pairs` bounds how many pairs
-    a hot block EMITS, but a block with 10^6 rows still lands on ONE shuffle
-    reducer. Here hot keys are split into salt buckets of ~rows_per_salt
-    rows, and only the block's ``anchor_rank`` anchor rows are replicated
-    into every bucket — pairs form between anchors and bucket members, so
-    connectivity through the anchors is preserved while no reducer sees more
-    than one bucket. Small blocks (≤ full_join_max) keep exhaustive
-    all-pairs semantics: every row is both anchor and member of one bucket.
-
-    Physical shape (r3): ONE window pass tags (rn, bn) — rank and size share
-    a single WindowExec (:func:`_rank_and_size`) — and an explicit
-    ``repartition(block_key)`` sits ABOVE the window, so every downstream
-    consumer (both sides of the small-block self-join, the hot members, the
-    hot anchors) reads that one reused exchange instead of re-evaluating the
-    explode+sort pipeline per branch (the r2 plan ran the full window twice;
-    AQE dedupes identical shuffle stages, but only below an exchange
-    boundary). The big table is sorted once and shuffled twice total
-    (window + post-window exchange) no matter how skewed the keys are.
-
-    ``hot_tier`` (VERDICT r3 "What's wrong" #3): ``'anchor'`` (default)
-    emits only anchor→member pairs above the cap — connectivity-preserving,
-    which is all transitive CLUSTERING needs, but a hot block's
-    member–member near-dup pairs are absent from the standalone pair list
-    (counted in the drop stats, not emitted). ``'within_salt'`` additionally
-    emits ALL pairs inside each ≤``rows_per_salt``-row salt bucket — bounded
-    O(rows_per_salt·n) work with no single-reducer blowup, recovering the
-    bulk of member–member recall for recall-sensitive dedup. Cross-bucket
-    member pairs remain connected only through the replicated anchors (by
-    construction; still logged, still not silent).
-    """
-    if hot_tier not in ("anchor", "within_salt"):
-        raise ValueError(
-            f"hot_tier must be 'anchor' or 'within_salt', got {hot_tier!r}"
-        )
-    # the exact: exclusion only applies to the pipeline's string key space;
-    # dedup callers pass xxhash64-compressed (long) keys with no exact tier
-    if dict(blocks.dtypes).get("block_key") == "string":
-        blocks = blocks.filter(~F.col("block_key").startswith("exact:"))
-    has_h = "h" in blocks.columns
-    h_a = [F.col("h").alias("h_a")] if has_h else []
-    h_b = [F.col("h").alias("h_b")] if has_h else []
-    out_cols = ["uid_a", "uid_b"] + (["h_a", "h_b"] if has_h else [])
-    ranked = _rank_and_size(blocks).repartition("block_key")
-
-    # small blocks: plain within-block self-join, both sides off the reused
-    # exchange, already co-partitioned by block_key. The merge hint is
-    # load-bearing (r6): Catalyst's size estimate otherwise BROADCASTS the
-    # right side, which wraps it in a BroadcastExchange that re-evaluates
-    # the whole window tower instead of reading the pinned exchange
-    # (static broadcasts sit outside AQE stage reuse — measured 1.6x the
-    # builder wall at sf1.0); a shuffle-based join keeps both sides on the
-    # one materialized exchange and spills gracefully at any scale
-    small = ranked.filter(F.col("bn") <= cfg.full_join_max)
-    s_left = small.select("block_key", F.col("uid").alias("uid_a"), *h_a)
-    s_right = small.select("block_key", F.col("uid").alias("uid_b"), *h_b).hint(
-        "merge"
-    )
-    small_pairs = (
-        s_left.join(s_right, "block_key")
-        .filter(F.col("uid_a") < F.col("uid_b"))
-        .select(*out_cols)
-    )
-
-    # hot blocks: salt members; replicate anchors to every salt bucket
-    hot = ranked.filter(F.col("bn") > cfg.full_join_max)
-    n_salts = _n_salts(rows_per_salt)
-    members = _salted_hot_members(hot, rows_per_salt).select(
-        "block_key", "salt", F.col("uid").alias("uid_b"), *h_b
-    )
-    anchors = (
-        hot.filter(F.col("rn") <= cfg.anchor_rank)
-        .withColumn("salt_arr", F.sequence(F.lit(0), n_salts - 1))
-        .select(
-            "block_key",
-            F.explode("salt_arr").alias("salt"),
-            F.col("uid").alias("uid_a"),
-            *h_a,
-        )
-    )
-    # same merge hint as the small self-join: keep the members side on its
-    # pinned (block_key, salt) exchange instead of a broadcast re-evaluation
-    members_p = members.repartition("block_key", "salt").hint("merge")
-    # orient (uid_a < uid_b); when carrying h, swap h alongside the uids
-    fwd = F.col("uid_a") < F.col("uid_b")
-    oriented = [
-        F.least("uid_a", "uid_b").alias("uid_a"),
-        F.greatest("uid_a", "uid_b").alias("uid_b"),
-    ] + (
-        [
-            F.when(fwd, F.col("h_a")).otherwise(F.col("h_b")).alias("h_a"),
-            F.when(fwd, F.col("h_b")).otherwise(F.col("h_a")).alias("h_b"),
-        ]
-        if has_h
-        else []
-    )
-    hot_pairs = (
-        anchors.join(members_p, ["block_key", "salt"])
-        .filter(F.col("uid_a") != F.col("uid_b"))
-        .select(*oriented)
-    )
-    if hot_tier == "within_salt":
-        # exhaustive pairs inside each salt bucket: both sides read the same
-        # pinned (block_key, salt) exchange, every reducer group is bounded
-        # by ~rows_per_salt members
-        w_left = members_p.select(
-            "block_key",
-            "salt",
-            F.col("uid_b").alias("uid_a"),
-            *([F.col("h_b").alias("h_a")] if has_h else []),
-        )
-        within = (
-            w_left.join(members_p, ["block_key", "salt"])
-            .filter(F.col("uid_a") < F.col("uid_b"))
-            .select(*out_cols)
-        )
-        hot_pairs = hot_pairs.unionByName(within)
-    return small_pairs.unionByName(hot_pairs).distinct()
-
-
-def _n_salts(rows_per_salt: int):
-    return F.greatest(F.lit(1), F.ceil(F.col("bn") / F.lit(rows_per_salt)).cast("int"))
-
-
-def _salted_hot_members(hot: DataFrame, rows_per_salt: int) -> DataFrame:
-    """Attach the deterministic salt bucket to hot-block member rows."""
-    return hot.withColumn(
-        "salt", F.pmod(F.xxhash64("uid"), _n_salts(rows_per_salt)).cast("int")
-    )
-
-
-def salt_distribution(
-    blocks: DataFrame, cfg: PairsConfig = PairsConfig(), rows_per_salt: int = 512
-) -> DataFrame:
-    """Members per (block_key, salt) reducer group for the HOT tier — the
-    observable skew bound behind :func:`candidate_pairs_salted`: after
-    salting, no join task reads a group materially bigger than
-    ``rows_per_salt`` (hash jitter aside), no matter how hot the key. One
-    row per group: (block_key, salt, members)."""
-    if dict(blocks.dtypes).get("block_key") == "string":
-        blocks = blocks.filter(~F.col("block_key").startswith("exact:"))
-    ranked = _rank_and_size(blocks)
-    hot = ranked.filter(F.col("bn") > cfg.full_join_max)
-    return (
-        _salted_hot_members(hot, rows_per_salt)
-        .groupBy("block_key", "salt")
-        .agg(F.count(F.lit(1)).alias("members"))
-    )
-
-
 def pair_stats(blocks: DataFrame, cfg: PairsConfig = PairsConfig()) -> DataFrame:
     """Per-block emitted vs theoretical pair counts (logged, not silent)."""
     sizes = blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
-    n = F.col("n")
-    theoretical = (n * (n - 1) / 2).cast("long")
-    emitted = F.when(
-        n <= cfg.full_join_max, theoretical
-    ).otherwise(
-        (F.lit(cfg.anchor_rank) * (n - 1) - F.lit(cfg.anchor_rank * (cfg.anchor_rank - 1) // 2)).cast("long")
-    )
+    theoretical, emitted = _pair_counts(F.col("n"), cfg)
     return sizes.select(
         "block_key",
-        n.alias("block_size"),
+        F.col("n").alias("block_size"),
         theoretical.alias("pairs_theoretical"),
         emitted.alias("pairs_emitted"),
     )

@@ -182,9 +182,11 @@ def _run_pipeline_body(
     from pyspark.sql import Observation
 
     obs = Observation("pair_stats")
+    # exact: blocks are never self-joined — exact_duplicate_edges covers them
+    pairable = blocks.filter(~F.col("block_key").startswith("exact:"))
 
     def build_candidates() -> DataFrame:
-        blk = candidate_pairs(blocks, cfg.pairs, observe=obs).withColumn(
+        blk = candidate_pairs(pairable, cfg.pairs, observe=obs).withColumn(
             "src", F.lit("block")
         )
         # exact rows are never scored — null content keys keep the union
@@ -217,13 +219,9 @@ def _run_pipeline_body(
         stats = store.log[-1].get("metrics") or {}
         if "theoretical" not in stats:
             # the manifest lacks them: a pre-annotation checkpoint dir, or a
-            # kill between the manifest write and the annotate below. Over
-            # the same blocks the Observation saw: candidate_pairs never
-            # pairs exact: keys (exact_duplicate_edges does)
-            stats = pair_stats(
-                blocks.filter(~F.col("block_key").startswith("exact:")),
-                cfg.pairs,
-            ).agg(
+            # kill between the manifest write and the annotate below; over
+            # the same blocks the Observation saw
+            stats = pair_stats(pairable, cfg.pairs).agg(
                 F.sum("pairs_theoretical").alias("theoretical"),
                 F.sum("pairs_emitted").alias("emitted"),
                 F.max("block_size").alias("max_block"),

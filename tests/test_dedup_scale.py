@@ -1,8 +1,8 @@
 """Scale-hardening tests for the standalone dedup operators (VERDICT r1 #1).
 
 A hot bucket (a boilerplate shingle shared by many docs, an LSH band key of
-a mass-vendored blob) must be anchor-capped + salted — bounded pair output —
-instead of O(n²) on one reducer, while buckets at or under full_join_max
+a mass-vendored blob) must be anchor-capped — bounded pair output —
+instead of O(n²), while buckets at or under full_join_max
 keep the exhaustive all-pairs semantics the DuckDB oracles verify. Also pins
 the cache-hygiene contract: dedup calls leave NO persisted RDDs behind.
 """
